@@ -21,11 +21,11 @@ import org.apache.spark.sql.DataFrame
   * context (each suite / tool run) can never serve a frame whose backing
   * blocks died with the old context.
   *
-  * [[clear]] is the honesty hook: Bench calls it alongside
-  * `spark.catalog.clearCache()` between timing passes so each pass re-does
-  * the full training work. Within-pass sharing IS the measured shape —
-  * train once, serve many — but cross-pass reuse would under-report
-  * (Bench.scala's cache-discipline note).
+  * [[clear]] is the honesty hook: the benchmark (perfbench) calls it
+  * alongside `spark.catalog.clearCache()` between timed passes so each
+  * pass re-does the full training work. Within-pass sharing IS the
+  * measured shape — train once, serve many — but cross-pass reuse would
+  * under-report.
   */
 object Memo {
   private val m = new ConcurrentHashMap[(String, String), DataFrame]()
@@ -52,7 +52,7 @@ object Memo {
     * [[clear]] honesty hook as [[cached]], for values like a staged
     * snapshot's (path, affected-months) handle (round 15: the
     * merge-family queries share ONE staged base per app instead of each
-    * re-staging the identical fixture; Bench's between-pass clear still
+    * re-staging the identical fixture; perfbench's between-pass clear still
     * re-pays the staging once per pass). */
   def cachedRef[T <: AnyRef](appId: String, key: String)(build: => T): T = {
     val k = (appId, key)

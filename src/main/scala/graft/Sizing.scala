@@ -30,7 +30,7 @@ import org.apache.spark.sql.SparkSession
   *    sqrt(8N), the balanced single-level-quantizer choice that keeps
   *    total work at the Θ(N^1.5) flat-assignment optimum (see ivfCells'
   *    Scaladoc; measured at sf10, round 11). The 64 target is MEASURED:
-  *    ScalingAB's cell-sizing law at sf1 (20k vectors) shows runtime
+  *    a cell-sizing sweep at sf1 (20k vectors) showed runtime
   *    1.90 s → 0.50 s and drops 15,406 → 2,462 as K goes 10 → 160 (cell
   *    2000 → 125); SemDeDup itself runs 110k clusters for LAION-440M
   *    (arXiv:2303.09540 §3).
@@ -63,7 +63,7 @@ object Sizing {
   /** (appId, dir) → embeddings row count. Memoized so the family of
     * consumers pays ONE metadata-cheap count() per session per corpus;
     * keyed by applicationId for the same staleness reason as Memo.
-    * Memo.clear() clears this too (Bench's between-pass honesty hook) —
+    * Memo.clear() clears this too (perfbench's between-pass hook) —
     * a row count is catalog-grade metadata, but re-deriving it per pass
     * keeps "each pass re-does all work" literally true. */
   private val counts = new ConcurrentHashMap[(String, String), java.lang.Long]()
@@ -254,7 +254,7 @@ object Sizing {
 
   /** (appId, dir) → documents row count, for the TEXT-retrieval anchor
     * batch (BM25 / RRF query set). Same memo discipline as [[embCount]];
-    * Memo.clear() clears it so Bench passes re-derive it. */
+    * Memo.clear() clears it so perfbench's passes re-derive it. */
   private val docCounts =
     new ConcurrentHashMap[(String, String), java.lang.Long]()
 

@@ -45,8 +45,8 @@ object Tables {
     *   - anything else (TIMESTAMP_NTZ or TIMESTAMP) → already µs; a cast
     *     to TIMESTAMP_NTZ is a no-op for NTZ and pins the type otherwise.
     *
-    * `nanosAsLong` is REQUIRED at session build (Verify/Bench/TimeOne/
-    * Profile and the test fixture all set it) — the reader itself never
+    * `nanosAsLong` is REQUIRED at session build (`Sessions.local` sets it
+    * for Verify, GenScale and the test fixture) — the reader itself never
     * mutates session conf. Against a NANOS fixture without the conf,
     * Spark's own scan error names the flag; for the current µs fixtures
     * the conf is simply unused.

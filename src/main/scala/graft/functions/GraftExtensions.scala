@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Session-extension entry point: lets a deployment enable the library's
   * native functions cluster-wide via configuration —
@@ -18,33 +18,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // (graft.plans.JaccardPrefilterRule — a pure optimization, see its
     // header for the implication proof and the idempotence argument)
     ext.injectOptimizerRule(_ => graft.plans.JaccardPrefilterRule)
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
-      (args: Seq[Expression]) => CosineSim(args.head, args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("jaccard_sim"),
-      new ExpressionInfo(classOf[JaccardSim].getName, "jaccard_sim"),
-      (args: Seq[Expression]) => JaccardSim(args.head, args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("hyperplane_sig"),
-      new ExpressionInfo(classOf[HyperplaneSig].getName, "hyperplane_sig"),
-      (args: Seq[Expression]) => HyperplaneSig(args.head, args(1), args(2))))
-    ext.injectFunction((
-      FunctionIdentifier("poly_hash"),
-      new ExpressionInfo(classOf[PolyHash].getName, "poly_hash"),
-      (args: Seq[Expression]) => PolyHash(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sigs"),
-      new ExpressionInfo(classOf[MinHashSigs].getName, "minhash_sigs"),
-      (args: Seq[Expression]) => MinHashSigs(args.head, args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("simhash_sig"),
-      new ExpressionInfo(classOf[SimHashSig].getName, "simhash_sig"),
-      (args: Seq[Expression]) => SimHashSig(args.head, args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("ngram_hashes"),
-      new ExpressionInfo(classOf[NgramHashes].getName, "ngram_hashes"),
-      (args: Seq[Expression]) => NgramHashes(args.head, args(1))))
+    for ((name, cls, builder) <- CosineSim.natives)
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), builder))
   }
 }

@@ -21,7 +21,7 @@ object Formats {
   // Inside the repo per the environment contract; unique per scale factor
   // AND per Spark application (applicationId), so two concurrent runs at
   // the same SF can't overwrite each other's scratch mid-read. Within one
-  // application the path is stable, so Bench's pass-2 re-read hits the
+  // application the path is stable, so a second pass's re-read hits the
   // same files it wrote in pass 1 (same work, comparable timing).
   private def scratch(s: SparkSession, d: String, fmt: String): String =
     s"/root/repo/target/s4demo/${s.sparkContext.applicationId}/" +
@@ -547,8 +547,8 @@ object Formats {
     * two-commit [[sharedBase12]] (round 15); lifecycle keeps its own
     * snapshot because its base layout differs (deliberate fragmentation)
     * and its compaction commit would shift every other consumer's
-    * generation numbers. Registered through Memo.cachedRef, so Bench's
-    * between-pass clear re-pays the one staging per pass. */
+    * generation numbers. Registered through Memo.cachedRef, so perfbench's
+    * between-pass Memo.clear() re-pays the one staging per pass. */
   private def sharedBase1(s: SparkSession, d: String)
       : (String, DataFrame, Seq[String], Seq[(String, Long)]) =
     graft.Memo.cachedRef(s.sparkContext.applicationId, s"merge_base1:$d") {

@@ -42,7 +42,7 @@ object LlmSimilarity {
     * fixtures, 32 at sf0.1, 313 at sf1), so cell population — what the
     * SemDeDup pair kernel is quadratic in — stays bounded as the corpus
     * grows (round 9's one `weak`: K pinned at 10 measured exp 0.54 and
-    * ~90% spurious drops at sf1; ScalingAB's cell-sizing law). Iterations
+    * ~90% spurious drops at sf1; see Sizing's cell-sizing law). Iterations
     * stay a small constant — each costs one map-only assignment pass plus
     * one K-key agg, and k-means converges most of the way in 2-3 rounds. */
   private def kCells(s: SparkSession, d: String): Int =

@@ -414,7 +414,7 @@ object NearDup {
     * stays pinned because the returned plan reads it; it is one skinny
     * (v, l) row per non-isolated vertex — callers that are done with the
     * result can `unpersist()` it (or `spark.catalog.clearCache()`), and
-    * Bench does exactly that between passes. Caveat for CHECKPOINTED
+    * perfbench does exactly that between passes. Caveat for CHECKPOINTED
     * generations: localCheckpoint persists the RDD directly, outside the
     * CacheManager, so `unpersist()`/`clearCache()` are no-ops on them —
     * their blocks are freed by the ContextCleaner once unreferenced,
@@ -740,7 +740,7 @@ object NearDup {
     // this stage ~6× per action through corpusTf/queryTerms, and each
     // materialized() CALL costs an eager count job even on warm cache —
     // the memo hands every caller the same DataFrame so the job runs
-    // once per session per corpus (cleared between Bench passes).
+    // once per session per corpus (cleared between perfbench passes).
     graft.Memo.cached(s.sparkContext.applicationId, s"term_freqs:$d") {
       materialized(tokens(s, d)
         .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),

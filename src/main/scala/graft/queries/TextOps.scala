@@ -355,8 +355,8 @@ object TextOps {
     // epoch consumes the same files — but text_tokenize_pack and
     // curation_epoch_shuffle each re-derived it per call (~3 s at sf0.1
     // each). Skinny (seq_id, counts, checksum) like the other registry
-    // entries; Bench's between-pass clear still re-pays the build once
-    // per pass.
+    // entries; perfbench's between-pass Memo.clear() still re-pays the
+    // build once per pass.
     graft.Memo.cached(s.sparkContext.applicationId, s"packed_seqs:$d") {
       packedSeqsBuild(s, d).localCheckpoint()
     }

@@ -165,6 +165,34 @@ object Streams {
 
   private val gapMs: Long = 30 * 60 * 1000L
 
+  /** The per-event step both sessionizers share: folds one user's batch,
+    * in (ts, event_id) order, into the open session `open`, closing it on
+    * a gap of more than 30 min. Returns the session left open and the
+    * sessions the batch closed. A late event earlier than the open
+    * session's start moves the start back: the 30 min watermark keeps it
+    * within 30 min of the max event time seen, which is at or after that
+    * start, so it is never a gap before the session and always joins. */
+  private def foldSessions(user: Long, open: Option[SessionState],
+      rows: Iterator[Event]): (Option[SessionState], Vector[SessionOut]) = {
+    var cur = open
+    val closed = Vector.newBuilder[SessionOut]
+    rows.toVector.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
+      val t = e.ts.getTime
+      cur match {
+        case Some(s) if t - s.last > gapMs =>
+          closed += SessionOut(user, new Timestamp(s.start),
+            new Timestamp(s.last), s.n, ended_by_timeout = false)
+          cur = Some(SessionState(t, t, 1L))
+        case Some(s) =>
+          cur = Some(SessionState(math.min(s.start, t), math.max(s.last, t),
+            s.n + 1L))
+        case None =>
+          cur = Some(SessionState(t, t, 1L))
+      }
+    }
+    (cur, closed.result())
+  }
+
   /** T6: flatMapGroupsWithState sessionizer — one Session per user in the
     * state store; closes a session on a 30 min gap within the feed or on
     * event-time timeout once the watermark passes last+gap.
@@ -185,27 +213,12 @@ object Streams {
             Iterator.single(SessionOut(user, new Timestamp(s.start),
               new Timestamp(s.last), s.n, ended_by_timeout = true))
           } else {
-            val sorted = rows.toVector.sortBy(e => (e.ts.getTime, e.event_id))
-            var cur = state.getOption
-            val closed = Vector.newBuilder[SessionOut]
-            sorted.foreach { e =>
-              val t = e.ts.getTime
-              cur match {
-                case Some(s) if t - s.last > gapMs =>
-                  closed += SessionOut(user, new Timestamp(s.start),
-                    new Timestamp(s.last), s.n, ended_by_timeout = false)
-                  cur = Some(SessionState(t, t, 1L))
-                case Some(s) =>
-                  cur = Some(SessionState(s.start, math.max(s.last, t), s.n + 1L))
-                case None =>
-                  cur = Some(SessionState(t, t, 1L))
-              }
-            }
+            val (cur, closed) = foldSessions(user, state.getOption, rows)
             cur.foreach { s =>
               state.update(s)
               state.setTimeoutTimestamp(s.last + gapMs)
             }
-            closed.result().iterator
+            closed.iterator
           }
       }
   }
@@ -237,30 +250,16 @@ object Streams {
 
     override def handleInputRows(user: Long, rows: Iterator[Event],
         timers: TimerValues): Iterator[SessionOut] = {
-      val sorted = rows.toVector.sortBy(e => (e.ts.getTime, e.event_id))
-      var cur = if (session.exists()) Some(session.get()) else None
-      val prevDeadline = cur.map(_.last + gapMs)
-      val closed = Vector.newBuilder[SessionOut]
-      sorted.foreach { e =>
-        val t = e.ts.getTime
-        cur match {
-          case Some(s) if t - s.last > gapMs =>
-            closed += SessionOut(user, new Timestamp(s.start),
-              new Timestamp(s.last), s.n, ended_by_timeout = false)
-            cur = Some(SessionState(t, t, 1L))
-          case Some(s) =>
-            cur = Some(SessionState(s.start, math.max(s.last, t), s.n + 1L))
-          case None =>
-            cur = Some(SessionState(t, t, 1L))
-        }
-      }
+      val prev = if (session.exists()) Some(session.get()) else None
+      val prevDeadline = prev.map(_.last + gapMs)
+      val (cur, closed) = foldSessions(user, prev, rows)
       cur.foreach { s =>
         session.update(s)
         val deadline = s.last + gapMs
         prevDeadline.filter(_ != deadline).foreach(getHandle.deleteTimer)
         getHandle.registerTimer(deadline)
       }
-      closed.result().iterator
+      closed.iterator
     }
 
     override def handleExpiredTimer(user: Long, timers: TimerValues,

@@ -78,14 +78,7 @@ object GenScale {
     val modes = args.drop(2).toSet
     val skew = modes("skew")
     val zipf = modes("zipf")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     gen(spark, out, mult, skew, zipf)
     spark.stop()
   }

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Dev-only: replay embedding_pca_power's ENTIRE arithmetic on the driver
+/** Replay embedding_pca_power's ENTIRE arithmetic on the driver
   * (quantize → exact int64 Gram stats → round-9 covariance → pcaIters
   * rounded power-iteration generations) and diff it against the engine —
   * the independent third implementation that checks the distributed
@@ -12,9 +12,8 @@ import org.apache.spark.sql.SparkSession
   * already have wrapped). Exact-match is the expectation: every float op
   * in the pipeline is a pinned IEEE expression tree (see pcaTrained).
   *
-  * `GoldenSpec` calls [[PcaReplay.check]] at sf0.01 every test run; the
-  * main is for the big fixtures: `SPARK_GRAFT_SF_DIR=target/sf10 sbt
-  * "runMain graft.tools.PcaReplay"`. */
+  * `GoldenSpec` calls [[PcaReplay.check]] at sf0.01 every test run; it
+  * takes any session and fixture dir, so it runs at the big fixtures too. */
 object PcaReplay {
 
   private def round(x: Double, scale: Int): Double =
@@ -63,22 +62,5 @@ object PcaReplay {
     val loadDiff = engine.map(r => math.abs(r.getDouble(1) - v(r.getLong(0).toInt))).max
     val eigDiff = math.abs(engine.head.getDouble(2) - eig)
     (loadDiff, eigDiff, n)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try {
-      val (loadDiff, eigDiff, n) = check(spark, sfDir)
-      println(f"[pcareplay] $sfDir n=$n maxLoadingDiff=$loadDiff%.3e eigDiff=$eigDiff%.3e")
-    } finally spark.stop()
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,6 +16,27 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
 
   test("GraftExtensions injects cosine_sim without error") {
     new graft.functions.GraftExtensions().apply(new SparkSessionExtensions)
+  }
+
+  test("GraftExtensions injects every function register installs") {
+    val injected = mutable.Set.empty[String]
+    new graft.functions.GraftExtensions().apply(new SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit = {
+        injected += f._1.funcName
+        super.injectFunction(f)
+      }
+    })
+    // what register adds to a fresh session's registry, observed rather
+    // than read from the shared table
+    val fresh = spark.newSession()
+    def names = fresh.sessionState.functionRegistry.listFunction()
+      .map(_.funcName).toSet
+    val before = names
+    graft.functions.CosineSim.register(fresh)
+    val installed = names -- before
+    assert(installed.contains("cosine_sim") && installed.contains("cos_argmax"))
+    assert((installed -- injected).isEmpty,
+      s"registered but not injected: ${installed -- injected}")
   }
 
   test("registered cosine_sim computes a correct value end-to-end") {

@@ -607,6 +607,32 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     q.stop()
   }
 
+  // one user's earlier event arrives a micro-batch after a later one, still
+  // inside the watermark: it joins the open session and moves its start back
+  for ((label, sessionize) <- Seq(
+      "T6" -> Streams.statefulSessionize _,
+      "T6b" -> Streams.statefulSessionizeTws _))
+    test(s"$label sessionizer: an earlier event in a later batch moves the start back") {
+      implicit val ctx = spark.sqlContext
+      import spark.implicits._
+      val in = MemoryStream[Event]
+      val name = s"${label.toLowerCase}_late"
+      val q = sessionize(in.toDS()).writeStream
+        .format("memory").queryName(name).outputMode("append").start()
+      in.addData(ev(1, "2024-01-01 10:10:00"))
+      q.processAllAvailable()
+      in.addData(ev(2, "2024-01-01 10:00:00")) // watermark 09:40: not dropped
+      q.processAllAvailable()
+      in.addData(ev(20, "2024-01-01 12:00:00", user = 9))
+      q.processAllAvailable()
+      in.addData(ev(21, "2024-01-01 12:10:00", user = 9)) // closes u1 at 10:40
+      q.processAllAvailable()
+      val u1 = spark.table(name).as[SessionOut].collect().filter(_.user_id == 1)
+      assert(u1.map(s => (s.start, s.end, s.n_events, s.ended_by_timeout)).toSeq ==
+        Seq((ts("2024-01-01 10:00:00"), ts("2024-01-01 10:10:00"), 2L, true)))
+      q.stop()
+    }
+
   test("T6b ≡ W2: transformWithState sessionizer matches the batch sessionizer") {
     implicit val ctx = spark.sqlContext
     import spark.implicits._
