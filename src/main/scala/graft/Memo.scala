@@ -5,17 +5,21 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.DataFrame
 
 /** Session-scoped train-once-serve-many registry for derived MODEL tables
-  * — IVF cell centroids, PQ codebooks, dedup cluster labels — and the
+  * — IVF cell centroids, PQ codebooks, dedup cluster labels — the
   * STORED-INDEX tables they imply (the IVF inverted list, the PQ code
-  * table): tiny or skinny, deterministic, expensive-to-derive frames that
-  * a production deployment builds once and serves to every query, exactly
-  * like a feature/model store plus its index files. Spark's CacheManager already provides this sharing for
-  * plan-identical `cache()` stages (the near-dup signature index rides on
-  * it), but the iterative trainers end in `localCheckpoint` — a UNIQUE
-  * LogicalRDD per call — so plan-keying can never hit and, without this
-  * memo, every query that composes a trained table retrains it from
-  * scratch (measured at sf0.1: similarity_ivfpq re-paid both the IVF and
-  * PQ Lloyd's loops that similarity_ivf / embedding_pq had just run).
+  * table, the MinHash candidate and verified pair tables) and the shared
+  * near-dup SIGNATURE stages (tokens, MinHash signatures, term
+  * frequencies): deterministic, expensive-to-derive frames that a
+  * production deployment builds once and serves to every query, exactly
+  * like a feature/model store plus its index files. Spark's CacheManager
+  * shares plan-identical `cache()` data, but not the build: the trained
+  * tables are local relations or `localCheckpoint`s (a UNIQUE plan per
+  * call, so plan-keying can never hit), and an eager `cache().count()`
+  * stage runs its count job on every call even when the data is cached.
+  * Without this memo every query that composes a trained table retrains
+  * it from scratch (measured at sf0.1: similarity_ivfpq re-paid both the
+  * IVF and PQ Lloyd's loops that similarity_ivf / embedding_pq had just
+  * run), and every near-dup query re-counted the signature stages.
   *
   * Keys carry the SparkContext applicationId, so a stopped-and-replaced
   * context (each suite / tool run) can never serve a frame whose backing

@@ -47,6 +47,11 @@ import org.apache.spark.sql.types._
   * Null semantics of the expression itself: null vec or null candidate
   * array → null; empty candidate array → null; null candidate elements
   * are skipped (array_min semantics).
+  *
+  * The rule is written once in plain Scala, [[CosArgmax.nearest]]: the
+  * interpreted path (`nullSafeEval`) and the IVF trainer's Lloyd's step
+  * (LlmSimilarity.lloydStep) call it, and `doGenCode` is its one generated twin
+  * (PropertySpec pins the two equal).
   */
 case class CosArgmax(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -75,55 +80,9 @@ case class CosArgmax(left: Expression, right: Expression)
         s"array<double>>>), got ${left.dataType.sql} / ${right.dataType.sql}")
   }
 
-  override def nullSafeEval(vecV: Any, candsV: Any): Any = {
-    val vec = vecV.asInstanceOf[ArrayData]
-    val cands = candsV.asInstanceOf[ArrayData]
-    val n = vec.numElements()
-    val isF = vecIsFloat
-    var found = false; var bestNull = false
-    var bestNs = 0d; var bestId = 0L
-    var j = 0
-    while (j < cands.numElements()) {
-      if (!cands.isNullAt(j)) {
-        val c = cands.getStruct(j, 2)
-        val id = c.getLong(0)
-        val cent = c.getArray(1)
-        // cosine in CosineSim's exact operation order; null on any
-        // degenerate input
-        var cosNull = cent.numElements() != n
-        var dot = 0d; var na = 0d; var nb = 0d
-        var i = 0
-        while (!cosNull && i < n) {
-          if (vec.isNullAt(i) || cent.isNullAt(i)) cosNull = true
-          else {
-            val x = if (isF) vec.getFloat(i).toDouble else vec.getDouble(i)
-            val y = cent.getDouble(i)
-            dot += x * y; na += x * x; nb += y * y
-            i += 1
-          }
-        }
-        if (!cosNull && (na == 0d || nb == 0d)) cosNull = true
-        val ns =
-          if (cosNull) 0d
-          else -(java.math.BigDecimal
-            .valueOf(dot / (math.sqrt(na) * math.sqrt(nb)))
-            .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue() + 0d)
-        val better =
-          if (!found) true
-          else if (cosNull != bestNull) cosNull // null ns sorts first
-          else if (cosNull) id < bestId
-          else {
-            val cmp = java.lang.Double.compare(ns, bestNs)
-            cmp < 0 || (cmp == 0 && id < bestId)
-          }
-        if (better) {
-          bestNull = cosNull; bestNs = ns; bestId = id; found = true
-        }
-      }
-      j += 1
-    }
-    if (!found) null else java.lang.Long.valueOf(bestId)
-  }
+  override def nullSafeEval(vecV: Any, candsV: Any): Any =
+    CosArgmax.nearest(vecV.asInstanceOf[ArrayData], vecIsFloat,
+      candsV.asInstanceOf[ArrayData])
 
   override def doGenCode(
       ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
@@ -200,4 +159,57 @@ case class CosArgmax(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosArgmax =
     copy(left = newLeft, right = newRight)
+}
+
+object CosArgmax {
+  /** The nearest-cell rule itself, in plain Scala: the `id` of the
+    * candidate `cos_argmax` picks (see the class doc), or null when no
+    * candidate is non-null. See the class doc for who calls it. */
+  def nearest(vec: ArrayData, vecIsFloat: Boolean,
+      cands: ArrayData): java.lang.Long = {
+    val n = vec.numElements()
+    var found = false; var bestNull = false
+    var bestNs = 0d; var bestId = 0L
+    var j = 0
+    while (j < cands.numElements()) {
+      if (!cands.isNullAt(j)) {
+        val c = cands.getStruct(j, 2)
+        val id = c.getLong(0)
+        val cent = c.getArray(1)
+        // cosine in CosineSim's exact operation order; null on any
+        // degenerate input
+        var cosNull = cent.numElements() != n
+        var dot = 0d; var na = 0d; var nb = 0d
+        var i = 0
+        while (!cosNull && i < n) {
+          if (vec.isNullAt(i) || cent.isNullAt(i)) cosNull = true
+          else {
+            val x = if (vecIsFloat) vec.getFloat(i).toDouble else vec.getDouble(i)
+            val y = cent.getDouble(i)
+            dot += x * y; na += x * x; nb += y * y
+            i += 1
+          }
+        }
+        if (!cosNull && (na == 0d || nb == 0d)) cosNull = true
+        val ns =
+          if (cosNull) 0d
+          else -(java.math.BigDecimal
+            .valueOf(dot / (math.sqrt(na) * math.sqrt(nb)))
+            .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue() + 0d)
+        val better =
+          if (!found) true
+          else if (cosNull != bestNull) cosNull // null ns sorts first
+          else if (cosNull) id < bestId
+          else {
+            val cmp = java.lang.Double.compare(ns, bestNs)
+            cmp < 0 || (cmp == 0 && id < bestId)
+          }
+        if (better) {
+          bestNull = cosNull; bestNs = ns; bestId = id; found = true
+        }
+      }
+      j += 1
+    }
+    if (!found) null else java.lang.Long.valueOf(bestId)
+  }
 }

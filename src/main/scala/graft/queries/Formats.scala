@@ -326,10 +326,11 @@ object Formats {
       .flatMap { case (v, m2d) => m2d.keys.map(_ -> v) }
       .groupBy(_._1)
       .map { case (m, pairs) => m -> vs.diff(pairs.map(_._2)) }
-    val allVs: org.apache.spark.sql.Column = array(vs.map(lit): _*)
-    val vlist = exceptions.toSeq.sortBy(_._1).foldLeft(allVs) {
+    // typed literals: a month every requested version serves from a
+    // retained copy has an EMPTY current list, still array<bigint>
+    val vlist = exceptions.toSeq.sortBy(_._1).foldLeft(typedLit(vs)) {
       case (acc, (m, vsCur)) =>
-        when(col("month") === m, array(vsCur.map(lit): _*)).otherwise(acc)
+        when(col("month") === m, typedLit(vsCur)).otherwise(acc)
     }
     val curLeg = current.select(
       (explode(vlist).as("v") +: cols.map(col)): _*)
@@ -578,14 +579,32 @@ object Formats {
     * own mutable snapshot for the price of a scratch-dir copy (fixture-
     * sized; the staging is bench setup, not the measured operator). */
   private def sharedBase12(s: SparkSession, d: String): (String, String) =
-    graft.Memo.cachedRef(s.sparkContext.applicationId, s"merge_base12:$d") {
-      val (p1, base0, _, mc) = sharedBase1(s, d)
-      val p = scratch(s, d, "merge_vc")
-      val dst = new java.io.File(p)
-      deleteRec(dst)
-      copyTree(new java.io.File(p1), dst)
-      (p, secondCommit(s, p, base0, mc))
+    // Safe under concurrent callers: the lock lets one caller build and
+    // hands the rest its Memo entry, and the build stages into a fresh
+    // directory that one atomic rename publishes, so `p` never holds a
+    // half-copied snapshot. A copy from before Memo.clear() is moved
+    // aside and deleted only after the new one is staged.
+    stagingLock.synchronized {
+      graft.Memo.cachedRef(s.sparkContext.applicationId, s"merge_base12:$d") {
+        val (p1, base0, _, mc) = sharedBase1(s, d)
+        val p = scratch(s, d, "merge_vc")
+        val tmp = new java.io.File(s"$p.staging-${java.util.UUID.randomUUID()}")
+        copyTree(new java.io.File(p1), tmp)
+        val bm = secondCommit(s, tmp.getPath, base0, mc)
+        val dst = new java.io.File(p)
+        if (dst.exists()) {
+          val old = new java.io.File(s"$p.old-${java.util.UUID.randomUUID()}")
+          java.nio.file.Files.move(dst.toPath, old.toPath,
+            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+          deleteRec(old)
+        }
+        java.nio.file.Files.move(tmp.toPath, dst.toPath,
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        (p, bm)
+      }
     }
+
+  private val stagingLock = new Object
 
   /** Driver-side recursive copy for scratch-snapshot derivation. */
   private def copyTree(src: java.io.File, dst: java.io.File): Unit =

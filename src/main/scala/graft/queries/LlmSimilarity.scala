@@ -1,9 +1,13 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.CosineSim
+import graft.functions.{CosArgmax, CosineSim}
 import graft.udaf.CentroidAgg
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -43,11 +47,12 @@ object LlmSimilarity {
     * SemDeDup pair kernel is quadratic in — stays bounded as the corpus
     * grows (round 9's one `weak`: K pinned at 10 measured exp 0.54 and
     * ~90% spurious drops at sf1; see Sizing's cell-sizing law). Iterations
-    * stay a small constant — each costs one map-only assignment pass plus
-    * one K-key agg, and k-means converges most of the way in 2-3 rounds. */
-  private def kCells(s: SparkSession, d: String): Int =
+    * stay a small constant — each costs one Spark job (a map-side
+    * assignment pass plus one K-key reduce), and k-means converges most of
+    * the way in 2-3 rounds. */
+  private[graft] def kCells(s: SparkSession, d: String): Int =
     graft.Sizing.ivfCells(graft.Sizing.corpusCount(s, d))
-  private val ivfIters = 2
+  private[graft] val ivfIters = 2
 
   /** Evaluation / mining anchor batch: the first `nAnchors` vec_ids
     * (DATA-DERIVED, clamp(N/100, 5..64)) are the query batch for
@@ -206,12 +211,13 @@ object LlmSimilarity {
     // bit-different last-ulp averages — full hash-checked oracle including
     // the training loop.
     //
-    // Scale shape (100 TB): per iteration, assignment is MAP-ONLY — the K
-    // centroids collapse to one broadcast row and each vector picks its
-    // cell via an array-min over K structs (no corpus shuffle, unlike a
-    // per-vector window) — and the recompute is one K-key partial agg.
-    // The driver loop is bounded (ivfIters) with each tiny centroid table
-    // localCheckpoint'ed, the labelPropagation lineage discipline.
+    // Scale shape (100 TB): each Lloyd's step is ONE Spark job in the
+    // MLlib KMeans shape — the K centroids come back to the driver and
+    // ship as a broadcast variable, each partition sums its vectors per
+    // nearest cell (no corpus shuffle, unlike a per-vector window), and
+    // the K-key partials merge into the new centroids on the executors.
+    // The loop is bounded (ivfIters); the last step's job checkpoints the
+    // K-row table, so no lineage grows and no separate checkpoint job runs.
     "similarity_ivf" -> ((s, d) => {
       CosineSim.register(s)
       val e = Tables.embeddings(s, d)
@@ -1196,7 +1202,7 @@ object LlmSimilarity {
       // coalesce(1) checkpoints like the single-query kernel: walk state
       // is ≤ anchors·(entry + hops·beam·k) rows — anchor-batch-bounded
       // metadata at ANY corpus size — so 1-task state ops beat
-      // shuffle.partitions-task ones (the ivfTrain centroid-table note)
+      // shuffle.partitions-task ones (the pqTrain codebook note)
       var sv = score(entry.distinct()).coalesce(1).localCheckpoint()
       for (_ <- 1 to graphHops) {
         val b = topOf(sv, beamWidth)
@@ -1362,25 +1368,27 @@ object LlmSimilarity {
     * collapse to one broadcast row and each vector argmaxes the rounded
     * cosine — ns = -(sim+0) normalizes the two IEEE zeros so a
     * 0.000000-rounded sim can't order differently from the twin's DESC
-    * ranking; min (ns, cell) = max sim, cell tie-break. The scan is the
-    * native [[graft.functions.CosArgmax]] — the former
-    * array_min(transform(...)) HOF paid an interpreted lambda frame per
-    * candidate, and flat assignment is the ENGINE'S LARGEST candidate
-    * count (N × K ≈ √(8N) under the Sizing cell law: ~16 × 10⁹
+    * ranking; min (ns, cell) = max sim, cell tie-break. The trained table
+    * holds one partition, and coalesce(1) declares it so: the collapse is
+    * a single-stage aggregate with no shuffle. The scan is the native
+    * [[graft.functions.CosArgmax]] —
+    * the former array_min(transform(...)) HOF paid an interpreted lambda
+    * frame per candidate, and flat assignment is the ENGINE'S LARGEST
+    * candidate count (N × K ≈ √(8N) under the Sizing cell law: ~16 × 10⁹
     * interpreted cosines per sf100z training pass, plus the 733 s vs
     * 52 s pass-1 warmup split measured at sf10z). Native = fused loop
     * inside whole-stage codegen, flat from pass 1 — what a fresh
     * 1000-executor cluster, always on pass 1, actually runs at.
     * PropertySpec pins bit-equality with the HOF form. */
   private[graft] def ivfAssigned(corpus: DataFrame, cents: DataFrame): DataFrame =
-    corpus.crossJoin(broadcast(
-        cents.agg(collect_list(struct(col("cell"), col("centroid"))).as("cl"))))
+    corpus.crossJoin(broadcast(cents.coalesce(1)
+        .agg(collect_list(struct(col("cell"), col("centroid"))).as("cl"))))
       .withColumn("cell", expr("cos_argmax(embedding, cl)"))
       .drop("cl")
 
   /** The ivfIters-round Lloyd's training loop → trained (cell, centroid)
-    * table. See similarity_ivf's scale notes: map-only assignment passes,
-    * K-key agg recomputes, tiny centroid tables localCheckpoint'ed. */
+    * table, one partition. See similarity_ivf's scale notes: one Spark
+    * job per step, the last of which also checkpoints the table. */
   private[graft] def ivfTrained(s: SparkSession, d: String): DataFrame =
     graft.Memo.cached(s.sparkContext.applicationId, s"ivf_cells:$d") {
       ivfTrain(s, d)
@@ -1388,6 +1396,21 @@ object LlmSimilarity {
 
   private def ivfTrain(s: SparkSession, d: String): DataFrame = {
     CosineSim.register(s)
+    val train = ivfTrainSet(s, d)
+    val k = kCells(s, d)
+    var cents = lloydStep(train, None, k)
+    for (_ <- 1 to ivfIters) cents = lloydStep(train, Some(cents.collect()), k)
+    // the last step's job computes the table and checkpoints it where it
+    // was computed: it never passes through the driver, and no separate
+    // checkpoint job runs
+    val table = cents.map { case (c, v) => Row(c, v.toSeq) }.localCheckpoint()
+    table.count()
+    s.createDataFrame(table, StructType(Seq(StructField("cell", LongType),
+      StructField("centroid", ArrayType(DoubleType, containsNull = false)))))
+  }
+
+  /** The vectors the IVF quantizer trains on. */
+  private[graft] def ivfTrainSet(s: SparkSession, d: String): DataFrame = {
     val corpus = Tables.embeddings(s, d).filter(col("vec_id") =!= 0)
     // SAMPLED Lloyd's training (Sizing.ivfTrainRate6 — the faiss
     // discipline): a K-cell quantizer converges on Θ(K) points, so the
@@ -1407,23 +1430,70 @@ object LlmSimilarity {
     // passes < rate6, biased over-sampling) while DuckDB errors on
     // BIGINT overflow. (2^31−1)·2654435761 ≈ 5.7e18 < Long.Max, so the
     // reduced form is exact in both engines at any vec_id.
-    val train = corpus.filter(expr(
+    corpus.filter(expr(
       s"(((vec_id % 2147483648L) * 2654435761L + 1013904223L) " +
         s"% 2147483648L) % 1000000L < ${rate6}L"))
-    def centsOf(assign: DataFrame): DataFrame =
-      assign.groupBy(col("cell"))
-        .agg(CentroidAgg(col("embedding")).as("c"))
-        .select(col("cell"), expr("transform(c, x -> round(x, 6))").as("centroid"))
-    // coalesce(1) before each checkpoint: the centroid table is K rows of
-    // 64 doubles — kilobytes at ANY corpus size — and a 1-partition
-    // checkpoint job costs 1 task instead of shuffle.partitions tasks
-    // (measured: the fixed per-task overhead dominated training time)
-    var cents = centsOf(train.withColumn("cell", expr(s"vec_id % ${kCells(s, d)}")))
-      .coalesce(1).localCheckpoint()
-    for (_ <- 1 to ivfIters)
-      cents = centsOf(ivfAssigned(train, cents)).coalesce(1).localCheckpoint()
-    cents
   }
+
+  /** ONE Lloyd's step as ONE Spark job, in the MLlib KMeans shape: the
+    * current (cell, centroid) pairs ship to the executors as a broadcast
+    * variable (None: the vec_id % K seeding), each partition sums its
+    * vectors per nearest cell in row order ([[CosArgmax.nearest]], the
+    * rule cos_argmax evaluates), and the K per-cell partials merge, divide
+    * and round to 6 dp in one reduce partition. That is CentroidAgg's
+    * reduce / merge / finish plus round(x, 6), so the (cell, centroid)
+    * pairs equal the DataFrame aggregation's (PropertySpec pins it); rows
+    * with a null embedding join no cell. The one reduce partition reads
+    * at most K × dim doubles per training partition, and the training set
+    * is a Θ(K)-vector sample. The job runs at the caller's action. */
+  private[graft] def lloydStep(train: DataFrame,
+      cents: Option[Array[(Long, Array[Double])]],
+      k: Int): RDD[(Long, Array[Double])] = {
+    val isF = train.schema("embedding").dataType match {
+      case ArrayType(FloatType, _) => true
+      case _ => false
+    }
+    def at(v: ArrayData, i: Int): Double =
+      if (isF) v.getFloat(i).toDouble else v.getDouble(i)
+    val merge = (a: (Array[Double], Long), b: (Array[Double], Long)) => {
+      var i = 0
+      while (i < a._1.length) { a._1(i) += b._1(i); i += 1 }
+      (a._1, a._2 + b._2)
+    }
+    val bc = train.sparkSession.sparkContext.broadcast(cents)
+    train.select(col("vec_id"), col("embedding")).queryExecution.toRdd
+      .mapPartitions { rows =>
+        val cands = bc.value.map(cs => new GenericArrayData(cs.map[Any] {
+          case (c, v) => new GenericInternalRow(Array[Any](c, new GenericArrayData(v)))
+        }))
+        val sums = scala.collection.mutable.LinkedHashMap.empty[Long, (Array[Double], Long)]
+        rows.foreach { r =>
+          if (!r.isNullAt(1)) {
+            val v = r.getArray(1)
+            val cell: java.lang.Long = cands match {
+              case None => if (r.isNullAt(0)) null else r.getLong(0) % k
+              case Some(cl) => CosArgmax.nearest(v, isF, cl)
+            }
+            if (cell != null) sums.get(cell) match {
+              case None => sums(cell) = (Array.tabulate(v.numElements())(at(v, _)), 1L)
+              case Some((acc, n)) =>
+                var i = 0
+                while (i < acc.length) { acc(i) += at(v, i); i += 1 }
+                sums(cell) = (acc, n + 1L)
+            }
+          }
+        }
+        sums.iterator
+      }
+      .reduceByKey(merge, 1)
+      .mapValues { case (acc, n) => acc.map(x => round6(x / n)) }
+  }
+
+  /** Spark's round(x, 6) on a double. */
+  private def round6(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** The 2 cells whose centroids are nearest the query (rounded cosine,
     * cell tie-break) — the probe set for similarity_ivf and ivfpq. */
@@ -1483,8 +1553,11 @@ object LlmSimilarity {
         .agg(CentroidAgg(col("sv")).as("c"))
         .select(col("sub"), col("code"),
           expr("transform(c, x -> round(x, 6))").as("centroid"))
-    // 1-partition checkpoints: the codebook is subs × codes = 128 rows of
-    // 8 doubles (see ivfTrained's note on why this is free at any scale)
+    // coalesce(1) before each checkpoint: the codebook is subs × codes =
+    // 128 rows of 8 doubles — kilobytes at ANY corpus size — and a
+    // 1-partition checkpoint job costs 1 task instead of
+    // shuffle.partitions tasks (measured: the fixed per-task overhead
+    // dominated training time)
     var cents = centsOf(sub.withColumn("code", expr(s"vec_id % $pqCodes")))
       .coalesce(1).localCheckpoint()
     for (_ <- 1 to iters)
@@ -1685,7 +1758,7 @@ object LlmSimilarity {
     * Scale: step 2 is the only corpus-wide work — O(N·d²) compute into a
     * d² = 4096-key agg (map-side combine shrinks the shuffle to
     * 4096 × partitions rows); steps 3-4 are 64-row driver-tiny jobs
-    * (1-partition checkpoints, see ivfTrained's note). */
+    * (1-partition checkpoints, see pqTrain's note). */
   private[graft] def pcaTrained(s: SparkSession, d: String): DataFrame =
     graft.Memo.cached(s.sparkContext.applicationId, s"pca_v:$d") {
       pcaTrain(s, d)

@@ -62,20 +62,6 @@ object NearDup {
       s"list_transform(range(length($s)), j -> CAST(ascii($s[j+1]) AS BIGINT))), " +
       s"(h, c) -> (h * 31 + c) % 1000000007)"
 
-  /** documents → (doc_id, n_chars, toks, tokh): tokens + their char
-    * hashes, MATERIALIZED. Two reasons this must be its own cached stage,
-    * both measured at sf0.1:
-    *  - the fixture tables are single parquet files = one input split; the
-    *    repartition spreads the expensive hashing across the cluster (at
-    *    real scale the source is already many-splits);
-    *  - every downstream expression that references a DERIVED column gets
-    *    that column's expression INLINED by CollapseProject — the shingle
-    *    combine indexes tokh three times, so an un-materialized tokh would
-    *    re-run the full char-hash pipeline 3× per shingle (≈900× per doc;
-    *    this inlining turned a 3 s pipeline into 60 s). Materializing makes
-    *    tokh a real column, so references are array loads.
-    * Spark's cache manager keys on the logical plan, so all near-dup
-    * queries share one cache entry per stage. */
   /** Pure transform twin of [[tokens]]: adds `toks`/`tokh` to any frame
     * with a `text` column. Shared by the batch path and the incremental
     * (streaming) index builder so stream ≡ batch holds BY CONSTRUCTION —
@@ -84,11 +70,21 @@ object NearDup {
     docs.withColumn("toks", split(lower(trim(col("text"))), " "))
       .withColumn("tokh", expr("transform(toks, t -> poly_hash(t))"))
 
-  private[graft] def tokens(s: SparkSession, d: String): DataFrame = {
-    CosineSim.register(s) // poly_hash: the native form of polySql (same value)
-    materialized(tokensOf(spreadIfNarrow(s, Tables.documents(s, d)))
-      .select(col("doc_id"), col("n_chars"), col("toks"), col("tokh")))
-  }
+  /** documents → (doc_id, n_chars, toks, tokh): tokens + their char
+    * hashes, the stage the token consumers (term frequencies, repeated
+    * n-grams, substring removal, the curation token passes) read.
+    * Memo-served and materialized ONCE per Memo generation: the fixture
+    * tables are single parquet files = one input split, so the spread
+    * parallelizes the hashing; and every caller gets the same DataFrame,
+    * so no caller re-reads `documents` or re-counts the cached stage. The
+    * MinHash signature stage ([[minhashSigs]]) does not read this stage:
+    * it fuses its own token pass. */
+  private[graft] def tokens(s: SparkSession, d: String): DataFrame =
+    graft.Memo.cached(s.sparkContext.applicationId, s"tokens:$d") {
+      CosineSim.register(s) // poly_hash: the native form of polySql (same value)
+      materialized(tokensOf(spreadIfNarrow(s, Tables.documents(s, d)))
+        .select(col("doc_id"), col("n_chars"), col("toks"), col("tokh")))
+    }
 
   /** Repartition the corpus on `doc_id` ONLY when the scan yields fewer
     * splits than the cluster's parallelism. The fixture tables are single
@@ -205,20 +201,9 @@ object NearDup {
     substringSegments(toksDf, hits, g)
   }
 
-  /** (doc_id, shl): distinct 3-token-shingle hash set — combines the three
-    * cached token hashes arithmetically (~6× less char work than hashing
-    * each shingle string) via the native `ngram_hashes`
-    * (functions/NgramHashes.scala; with it the whole signature pipeline —
-    * poly_hash → ngram_hashes → minhash_sigs/simhash_sig — is
-    * codegen-native). Materialized: `shl` is referenced inside the
-    * per-permutation / per-bit lambdas downstream (same inlining hazard). */
-  /** Pure transform twin: (doc_id, tokh) → distinct 3-shingle hash set. */
-  private[graft] def shingleSetsOf(toks: DataFrame): DataFrame =
-    toks.select(col("doc_id"), expr("ngram_hashes(tokh, 3)").as("shl"))
-      .filter(size(col("shl")) >= 2)
-
+  /** The shingle index: a projection of the cached signature stage. */
   private def shingleSets(s: SparkSession, d: String): DataFrame =
-    materialized(shingleSetsOf(tokens(s, d)))
+    minhashSigs(s, d).select(col("doc_id"), col("shl"))
 
   /** (doc_id, n_shingles, n_unique, novelty): fraction of a doc's
     * distinct shingles with corpus df = 1, off the shared cached shingle
@@ -241,27 +226,52 @@ object NearDup {
   /** cache() is lazy — a multi-branch plan over an unmaterialized cache
     * recomputes the subtree per branch (measured 51 s → 2 s at sf0.1).
     * One count() materializes the signature table before the self-join
-    * fans out; this is the "build the index once" step, not a collect. */
+    * fans out; this is the "build the index once" step, not a collect.
+    * Each call runs that count job, cached or not: a stage shared between
+    * queries is Memo-served so it is materialized once. */
   private def materialized(df: DataFrame): DataFrame = { df.cache().count(); df }
 
   /** (doc_id, shl, mh): 16 affine-permutation MinHash signatures over the
-    * shingle set, MATERIALIZED — the shared LSH index every near-dup
-    * variant's candidate generation reads. The native `minhash_sigs`
+    * shingle set — the shared LSH index every near-dup variant's candidate
+    * generation reads, and (projected) the shingle index of the SimHash,
+    * novelty and prefix-filter queries. ONE stage: the streaming twin's
+    * transform ([[sigsOf]]: the same expressions, the same filter) over
+    * the spread corpus, Memo-served and materialized once per Memo
+    * generation, so batch ≡ stream holds by construction and the chain
+    * head runs one eager count job, not one per token / shingle /
+    * signature stage. The native `minhash_sigs`
     * (functions/MinHashSigs.scala) replaces the HOF
     * `transform(sequence, p -> array_min(transform(shl, ...)))` form —
     * same values, one fused codegen'd loop instead of ~1000 interpreted
     * lambda frames per doc (the index build's hottest stage). */
-  private def minhashSigs(s: SparkSession, d: String): DataFrame =
-    materialized(shingleSets(s, d)
-      .withColumn("mh", expr("minhash_sigs(shl, 16)")))
+  private[graft] def minhashSigs(s: SparkSession, d: String): DataFrame =
+    graft.Memo.cached(s.sparkContext.applicationId, s"minhash_sigs:$d") {
+      CosineSim.register(s)
+      materialized(signaturesOf(spreadIfNarrow(s, Tables.documents(s, d))))
+        .filter(twoShingles)
+    }
 
   /** The full signature pipeline as ONE pure transform: any frame with
-    * (doc_id, text) → (doc_id, shl, mh). This is what the incremental
-    * index builder runs per micro-batch (graft.streaming.Streams
-    * .nearDupStream); the batch path runs the identical expressions with
-    * per-stage materialization. */
+    * (doc_id, text) → (doc_id, shl, mh) for the docs with ≥ 2 distinct
+    * shingles. The incremental index builder runs it per micro-batch
+    * (graft.streaming.Streams.nearDupStream); the batch index
+    * ([[minhashSigs]]) caches [[signaturesOf]] and filters the cached rows. */
   private[graft] def sigsOf(docs: DataFrame): DataFrame =
-    shingleSetsOf(tokensOf(docs)).withColumn("mh", expr("minhash_sigs(shl, 16)"))
+    signaturesOf(docs).filter(twoShingles)
+
+  /** [[sigsOf]] before its filter: `shl` is the distinct 3-token-shingle
+    * hash set, which the native `ngram_hashes` combines from the three
+    * token hashes arithmetically (~6× less char work than hashing each
+    * shingle string; with it the whole signature pipeline — poly_hash →
+    * ngram_hashes → minhash_sigs/simhash_sig — is codegen-native). The
+    * optimizer pushes a filter on `shl` below the projection that computes
+    * it and so evaluates the hashing twice per doc; the batch index
+    * filters after its cache instead. */
+  private def signaturesOf(docs: DataFrame): DataFrame =
+    tokensOf(docs).select(col("doc_id"), expr("ngram_hashes(tokh, 3)").as("shl"))
+      .withColumn("mh", expr("minhash_sigs(shl, 16)"))
+
+  private val twoShingles = size(col("shl")) >= 2
 
   /** (doc_id, line_no, line, norm): the line explode + normalization
     * (lower + trim) shared by batch dedup_lines_remove and the streaming
@@ -603,8 +613,10 @@ object NearDup {
       s"need 64 % blocks == 0 and 1 <= combo < blocks (got $blocks, $combo)")
     val w = 64 / blocks
     val mask = (1L << w) - 1
-    val sims = materialized(shingleSets(s, d)
-      .select(col("doc_id"), expr("simhash_sig(shl, 64)").as("sim")))
+    // not materialized: the two join sides are one plan, so their
+    // exchange is reused and the signatures are computed once
+    val sims = shingleSets(s, d)
+      .select(col("doc_id"), expr("simhash_sig(shl, 64)").as("sim"))
     val keyStructs = (0 until blocks).combinations(combo).toSeq.zipWithIndex
       .map { case (bs, idx) =>
         val key = bs.zipWithIndex.map { case (b, i) =>

@@ -2519,6 +2519,13 @@ class GoldenSpec extends AnyFunSuite with SparkFixture {
     val m02 = rowsOf(multi).filter(_._5 == "2024-02")
     assert(m02 == Seq((0L, 3L, 300L, "F", "2024-02"),
       (2L, 5L, 500L, "O", "2024-02")), s"2024-02 sweep wrong: $m02")
+    // a sweep that leaves out the current version (2): 2024-02 and
+    // 2024-03 are then served by retained copies at every requested
+    // version, so their current-layout version list is empty
+    val past = graft.queries.Formats.readAtVersions(spark, p, Seq(0L, 1L))
+    assert(past.schema("v").dataType == org.apache.spark.sql.types.LongType)
+    assert(rowsOf(past) == rowsOf(legs).filter(_._1 < 2L),
+      "multi-version reader without the current version diverged")
   }
 
   test("mergeCommit: a fully-emptied partition is not resurrected; " +

@@ -1,5 +1,8 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -51,6 +54,81 @@ class MemoSpec extends AnyFunSuite with SparkFixture {
     Memo.clear()
     val c3 = LlmSimilarity.ivfTrained(spark, sfSmall)
     assert(!(c3 eq c1), "clear() must retrain")
+    spark.catalog.clearCache()
+    Memo.clear()
+  }
+
+  test("the token and MinHash signature stages are Memo-served") {
+    Memo.clear()
+    val t1 = NearDup.tokens(spark, sfSmall)
+    val m1 = NearDup.minhashSigs(spark, sfSmall)
+    assert(NearDup.tokens(spark, sfSmall) eq t1)
+    assert(NearDup.minhashSigs(spark, sfSmall) eq m1)
+    Memo.clear()
+    assert(!(NearDup.tokens(spark, sfSmall) eq t1), "clear() must rebuild tokens")
+    assert(!(NearDup.minhashSigs(spark, sfSmall) eq m1),
+      "clear() must rebuild the signature stage")
+    spark.catalog.clearCache()
+    Memo.clear()
+  }
+
+  /** Stage names of each job launched while `body` runs. Listener events
+    * arrive asynchronously, so a marker job before and after the body
+    * brackets exactly the body's jobs once the second marker is seen. */
+  private def jobsDuring(body: => Unit): Seq[Seq[String]] = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[String])]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = seen.add((
+        Option(e.properties).map(_.getProperty("memospec.marker", "")).getOrElse(""),
+        e.stageInfos.map(_.name)))
+    }
+    def marker(tag: String): Unit = {
+      sc.setLocalProperty("memospec.marker", tag)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("memospec.marker", null)
+    }
+    sc.addSparkListener(l)
+    try {
+      marker("start")
+      body
+      marker("end")
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.asScala.exists(_._1 == "end")) {
+        assert(System.nanoTime() < deadline, "the end marker job never reached the listener")
+        Thread.sleep(10)
+      }
+    } finally sc.removeSparkListener(l)
+    seen.asScala.toSeq.dropWhile(_._1 != "start").drop(1)
+      .takeWhile(_._1 != "end").map(_._2)
+  }
+
+  test("IVF training runs one job per Lloyd's step") {
+    spark.catalog.clearCache()
+    // fixture schema reads aside, training runs the corpus count and the
+    // steps, nothing else
+    def work(body: => Unit) =
+      jobsDuring(body).filterNot(_.forall(_.startsWith("parquet at ")))
+    Memo.clear()
+    val count = work(Sizing.corpusCount(spark, sfSmall))
+    Memo.clear()
+    val jobs = work(LlmSimilarity.ivfTrained(spark, sfSmall))
+    val training = jobs.filter(_.exists(_.contains("LlmSimilarity.scala")))
+    assert(training.size == 1 + LlmSimilarity.ivfIters,
+      s"expected the seeding step plus ${LlmSimilarity.ivfIters} Lloyd's " +
+        s"steps, one job each: $jobs")
+    assert(jobs.size == training.size + count.size,
+      s"jobs beyond the steps and the corpus count ($count): $jobs")
+    Memo.clear()
+  }
+
+  test("dedup_simhash builds off dedup_containment's signature stage without a count job") {
+    spark.catalog.clearCache()
+    Memo.clear()
+    NearDup.queries("dedup_containment")(spark, sfSmall).collect()
+    val jobs = jobsDuring(NearDup.queries("dedup_simhash")(spark, sfSmall))
+    assert(!jobs.exists(_.exists(_.startsWith("count at "))),
+      s"building dedup_simhash re-counted a stage: $jobs")
     spark.catalog.clearCache()
     Memo.clear()
   }

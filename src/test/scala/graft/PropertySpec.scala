@@ -401,6 +401,105 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
       "a duplicated higher cell won a tie — tie-break broken")
   }
 
+  test("CosArgmax.nearest ≡ generated cos_argmax, ties and zero norms included") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import org.apache.spark.sql.types._
+    import graft.functions.CosArgmax
+    val rnd = new scala.util.Random(20261019L)
+    val dim = 12
+    // every 4th centroid repeats its predecessor (exact ties) and one
+    // candidate slot is null; the second list adds an all-zero centroid,
+    // whose null cosine sorts first
+    val cents: Seq[Array[Double]] = (0 until 20).map { c =>
+      val r2 = new scala.util.Random(if (c % 4 == 3) c - 1 else c)
+      Array.fill(dim)(math.rint(r2.nextDouble() * 200 - 100) / 100)
+    }
+    def listOf(cs: Seq[Array[Double]]) = new GenericArrayData(cs.zipWithIndex.map[Any] {
+      case (_, 7) => null
+      case (v, c) => new GenericInternalRow(Array[Any](c.toLong, new GenericArrayData(v)))
+    })
+    val cands = listOf(cents)
+    val withZero = listOf(cents.take(12) ++ Seq(Array.fill(dim)(0d)) ++ cents.drop(12))
+    val candType = ArrayType(StructType(Seq(StructField("cell", LongType),
+      StructField("centroid", ArrayType(DoubleType, false)))), true)
+    for (elem <- Seq(FloatType, DoubleType)) {
+      val gen = GenerateUnsafeProjection.generate(Seq(CosArgmax(
+        BoundReference(0, ArrayType(elem, false), true),
+        BoundReference(1, candType, true))))
+      (0 until 400).foreach { i =>
+        val xs = Array.fill(dim)(rnd.nextFloat() * 2f - 1f)
+        if (i % 50 == 0) java.util.Arrays.fill(xs, 0f) // zero-norm vector
+        val vec: ArrayData =
+          if (elem == FloatType) new GenericArrayData(xs.map[Any](identity))
+          else new GenericArrayData(xs.map[Any](_.toDouble))
+        for (cl <- Seq(cands, withZero)) {
+          val out = gen(new GenericInternalRow(Array[Any](vec, cl)))
+          val want = if (out.isNullAt(0)) null else java.lang.Long.valueOf(out.getLong(0))
+          assert(CosArgmax.nearest(vec, elem == FloatType, cl) == want,
+            s"$elem vector $i: shared rule vs generated code")
+        }
+      }
+    }
+    // the zero vector's cosines are all null: the lowest non-null id wins
+    val zero = new GenericArrayData(Array.fill[Any](dim)(0f))
+    assert(CosArgmax.nearest(zero, true, cands) == 0L)
+    assert(CosArgmax.nearest(zero, true, new GenericArrayData(Array.empty[Any])) == null)
+    // ties go to the lower id: a repeated centroid never wins
+    val picks = (0 until 200).map { _ =>
+      val v = new GenericArrayData(Array.fill[Any](dim)(rnd.nextFloat() * 2f - 1f))
+      CosArgmax.nearest(v, true, cands).longValue
+    }
+    assert(picks.forall(_ % 4 != 3), "a repeated higher id won a tie")
+    assert(picks.forall(_ != 7L), "a null candidate won")
+  }
+
+  test("the one-job Lloyd's step reproduces the DataFrame training loop") {
+    // the form it replaced: CentroidAgg per cell, round(x, 6), vectors
+    // assigned by cos_argmax against the collect_list broadcast row
+    import graft.queries.LlmSimilarity
+    import graft.udaf.CentroidAgg
+    graft.functions.CosineSim.register(spark)
+    def centsOf(assign: org.apache.spark.sql.DataFrame) =
+      assign.groupBy(col("cell"))
+        .agg(CentroidAgg(col("embedding")).as("c"))
+        .select(col("cell"), expr("transform(c, x -> round(x, 6))").as("centroid"))
+    def assigned(train: org.apache.spark.sql.DataFrame,
+        cents: org.apache.spark.sql.DataFrame) =
+      train.crossJoin(broadcast(
+          cents.agg(collect_list(struct(col("cell"), col("centroid"))).as("cl"))))
+        .withColumn("cell", expr("cos_argmax(embedding, cl)"))
+    def table(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
+    for (sf <- Seq(sfMid, "/root/testdata/sf0.1")) {
+      Memo.clear()
+      val train = LlmSimilarity.ivfTrainSet(spark, sf)
+      val k = LlmSimilarity.kCells(spark, sf)
+      var old = centsOf(train.withColumn("cell", expr(s"vec_id % $k"))).localCheckpoint()
+      def lloyd(cents: Option[Array[(Long, Array[Double])]]) =
+        LlmSimilarity.lloydStep(train, cents, k).collect().sortBy(_._1)
+      var now = lloyd(None)
+      for (step <- 0 to LlmSimilarity.ivfIters) {
+        if (step > 0) {
+          old = centsOf(assigned(train, old)).localCheckpoint()
+          now = lloyd(Some(now))
+        }
+        val want = table(old)
+        val got = now.toSeq.map { case (c, v) => (c, v.toSeq) }
+        assert(got.map(_._1) == want.map(_._1), s"$sf step $step: cells differ")
+        got.zip(want).foreach { case ((c, g), (_, w)) =>
+          assert(g.length == w.length && g.zip(w).forall { case (a, b) =>
+            java.lang.Double.compare(a, b) == 0 }, s"$sf step $step: cell $c differs")
+        }
+      }
+      assert(table(LlmSimilarity.ivfTrained(spark, sf)) ==
+        now.toSeq.map { case (c, v) => (c, v.toSeq) })
+    }
+    Memo.clear()
+  }
+
   test("scalar UDF equals the builtin but breaks out of codegen (why builtins win)") {
     import spark.implicits._
     val norm = udf((s: String) => s.trim.toLowerCase)
