@@ -50,8 +50,8 @@ import org.apache.spark.sql.types._
   *
   * The rule is written once in plain Scala, [[CosArgmax.nearest]]: the
   * interpreted path (`nullSafeEval`) and the IVF trainer's Lloyd's step
-  * (LlmSimilarity.lloydStep) call it, and `doGenCode` is its one generated twin
-  * (PropertySpec pins the two equal).
+  * (LlmSimilarity.lloydStep) call it, and `doGenCode` is its one
+  * generated twin (PropertySpec pins the two equal).
   */
 case class CosArgmax(left: Expression, right: Expression)
     extends BinaryExpression {
