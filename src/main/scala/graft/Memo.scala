@@ -13,9 +13,9 @@ import org.apache.spark.sql.DataFrame
   * production deployment builds once and serves to every query, exactly
   * like a feature/model store plus its index files. Spark's CacheManager
   * shares plan-identical `cache()` data, but not the build: the trained
-  * tables are local relations or `localCheckpoint`s (a UNIQUE plan per
-  * call, so plan-keying can never hit), and an eager `cache().count()`
-  * stage runs its count job on every call even when the data is cached.
+  * tables are `localCheckpoint`s (a UNIQUE plan per call, so plan-keying
+  * can never hit), and an eager `cache().count()` stage runs its count
+  * job on every call even when the data is cached.
   * Without this memo every query that composes a trained table retrains
   * it from scratch (measured at sf0.1: similarity_ivfpq re-paid both the
   * IVF and PQ Lloyd's loops that similarity_ivf / embedding_pq had just
@@ -30,6 +30,11 @@ import org.apache.spark.sql.DataFrame
   * pass re-does the full training work. Within-pass sharing IS the
   * measured shape — train once, serve many — but cross-pass reuse would
   * under-report.
+  *
+  * The signature stages are held by `cache()`, so a
+  * `spark.catalog.clearCache()` must always be followed by [[clear]]:
+  * clearing the cache alone leaves this memo serving frames whose data
+  * is gone, and every later read recomputes the whole stage.
   */
 object Memo {
   private val m = new ConcurrentHashMap[(String, String), DataFrame]()

@@ -2,11 +2,10 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{CosArgmax, CosineSim}
-import graft.udaf.CentroidAgg
-import org.apache.spark.rdd.RDD
+import graft.udaf.{CentroidAgg, CentroidBuf}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1399,14 +1398,11 @@ object LlmSimilarity {
     val train = ivfTrainSet(s, d)
     val k = kCells(s, d)
     var cents = lloydStep(train, None, k)
-    for (_ <- 1 to ivfIters) cents = lloydStep(train, Some(cents.collect()), k)
+    for (_ <- 1 to ivfIters) cents = lloydStep(train, Some(cents), k)
     // the last step's job computes the table and checkpoints it where it
     // was computed: it never passes through the driver, and no separate
     // checkpoint job runs
-    val table = cents.map { case (c, v) => Row(c, v.toSeq) }.localCheckpoint()
-    table.count()
-    s.createDataFrame(table, StructType(Seq(StructField("cell", LongType),
-      StructField("centroid", ArrayType(DoubleType, containsNull = false)))))
+    cents.localCheckpoint()
   }
 
   /** The vectors the IVF quantizer trains on. */
@@ -1436,64 +1432,51 @@ object LlmSimilarity {
   }
 
   /** ONE Lloyd's step as ONE Spark job, in the MLlib KMeans shape: the
-    * current (cell, centroid) pairs ship to the executors as a broadcast
-    * variable (None: the vec_id % K seeding), each partition sums its
-    * vectors per nearest cell in row order ([[CosArgmax.nearest]], the
-    * rule cos_argmax evaluates), and the K per-cell partials merge, divide
-    * and round to 6 dp in one reduce partition. That is CentroidAgg's
-    * reduce / merge / finish plus round(x, 6), so the (cell, centroid)
-    * pairs equal the DataFrame aggregation's (PropertySpec pins it); rows
-    * with a null embedding join no cell. The one reduce partition reads
-    * at most K × dim doubles per training partition, and the training set
-    * is a Θ(K)-vector sample. The job runs at the caller's action. */
-  private[graft] def lloydStep(train: DataFrame,
-      cents: Option[Array[(Long, Array[Double])]],
-      k: Int): RDD[(Long, Array[Double])] = {
-    val isF = train.schema("embedding").dataType match {
+    * current (cell, centroid) table is collected and ships to the
+    * executors as a broadcast variable (None: the vec_id % K seeding),
+    * each partition sums its vectors per nearest cell in row order
+    * ([[CosArgmax.nearest]], the rule cos_argmax evaluates), and the K
+    * per-cell partials merge and finish in one reduce partition. Those
+    * are CentroidAgg's add / merge / finish, and the centroids round with
+    * Spark's own round(x, 6), so the (cell, centroid) table equals the
+    * DataFrame aggregation's (PropertySpec pins it); rows with a null
+    * embedding join no cell. The one reduce partition reads at most
+    * K × dim doubles per training partition, and the training set is a
+    * Θ(K)-vector sample. The job runs at the caller's action. */
+  private[graft] def lloydStep(train: DataFrame, cents: Option[DataFrame],
+      k: Int): DataFrame = {
+    require(train.schema("embedding").dataType match {
       case ArrayType(FloatType, _) => true
       case _ => false
-    }
-    def at(v: ArrayData, i: Int): Double =
-      if (isF) v.getFloat(i).toDouble else v.getDouble(i)
-    val merge = (a: (Array[Double], Long), b: (Array[Double], Long)) => {
-      var i = 0
-      while (i < a._1.length) { a._1(i) += b._1(i); i += 1 }
-      (a._1, a._2 + b._2)
-    }
-    val bc = train.sparkSession.sparkContext.broadcast(cents)
-    train.select(col("vec_id"), col("embedding")).queryExecution.toRdd
+    }, "the IVF trainer reads array<float> embeddings")
+    val s = train.sparkSession
+    val bc = s.sparkContext.broadcast(cents.map(_.collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))))
+    val sums = train.select(col("vec_id"), col("embedding")).queryExecution.toRdd
       .mapPartitions { rows =>
         val cands = bc.value.map(cs => new GenericArrayData(cs.map[Any] {
           case (c, v) => new GenericInternalRow(Array[Any](c, new GenericArrayData(v)))
         }))
-        val sums = scala.collection.mutable.LinkedHashMap.empty[Long, (Array[Double], Long)]
+        val bufs = scala.collection.mutable.LinkedHashMap.empty[Long, CentroidBuf]
         rows.foreach { r =>
           if (!r.isNullAt(1)) {
             val v = r.getArray(1)
             val cell: java.lang.Long = cands match {
               case None => if (r.isNullAt(0)) null else r.getLong(0) % k
-              case Some(cl) => CosArgmax.nearest(v, isF, cl)
+              case Some(cl) => CosArgmax.nearest(v, true, cl)
             }
-            if (cell != null) sums.get(cell) match {
-              case None => sums(cell) = (Array.tabulate(v.numElements())(at(v, _)), 1L)
-              case Some((acc, n)) =>
-                var i = 0
-                while (i < acc.length) { acc(i) += at(v, i); i += 1 }
-                sums(cell) = (acc, n + 1L)
-            }
+            if (cell != null) bufs(cell) = CentroidAgg.add(
+              bufs.getOrElse(cell, CentroidAgg.zero), v.numElements(), v.getFloat(_))
           }
         }
-        sums.iterator
+        bufs.iterator
       }
-      .reduceByKey(merge, 1)
-      .mapValues { case (acc, n) => acc.map(x => round6(x / n)) }
+      .reduceByKey(CentroidAgg.merge _, 1)
+      .map { case (c, b) => Row(c, CentroidAgg.finish(b)) }
+    s.createDataFrame(sums, StructType(Seq(StructField("cell", LongType),
+        StructField("c", ArrayType(DoubleType, containsNull = false)))))
+      .select(col("cell"), expr("transform(c, x -> round(x, 6))").as("centroid"))
   }
-
-  /** Spark's round(x, 6) on a double. */
-  private def round6(x: Double): Double =
-    if (x.isNaN || x.isInfinite) x
-    else java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** The 2 cells whose centroids are nearest the query (rounded cosine,
     * cell tie-break) — the probe set for similarity_ivf and ivfpq. */

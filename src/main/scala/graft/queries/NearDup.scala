@@ -231,15 +231,20 @@ object NearDup {
     * queries is Memo-served so it is materialized once. */
   private def materialized(df: DataFrame): DataFrame = { df.cache().count(); df }
 
-  /** (doc_id, shl, mh): 16 affine-permutation MinHash signatures over the
-    * shingle set — the shared LSH index every near-dup variant's candidate
-    * generation reads, and (projected) the shingle index of the SimHash,
-    * novelty and prefix-filter queries. ONE stage: the streaming twin's
-    * transform ([[sigsOf]]: the same expressions, the same filter) over
-    * the spread corpus, Memo-served and materialized once per Memo
-    * generation, so batch ≡ stream holds by construction and the chain
-    * head runs one eager count job, not one per token / shingle /
-    * signature stage. The native `minhash_sigs`
+  /** (doc_id, shl, mh, sim): 16 affine-permutation MinHash signatures over
+    * the shingle set — the shared LSH index every near-dup variant's
+    * candidate generation reads, and (projected) the shingle index of the
+    * novelty and prefix-filter queries — plus the 64-bit SimHash
+    * signature the SimHash blockings key on. ONE stage: the streaming
+    * twin's transform ([[sigsOf]]: the same expressions, the same filter)
+    * over the spread corpus, plus `sim`, Memo-served and materialized once
+    * per Memo generation, so batch ≡ stream holds by construction and the
+    * chain head runs one eager count job, not one per token / shingle /
+    * signature stage. `sim` is a real column because the SimHash
+    * self-joins reference it on both sides: computed in their plan, each
+    * side re-ran it, and again in the `isnotnull` filter the optimizer
+    * infers for the join key.
+    * The native `minhash_sigs`
     * (functions/MinHashSigs.scala) replaces the HOF
     * `transform(sequence, p -> array_min(transform(shl, ...)))` form —
     * same values, one fused codegen'd loop instead of ~1000 interpreted
@@ -247,7 +252,8 @@ object NearDup {
   private[graft] def minhashSigs(s: SparkSession, d: String): DataFrame =
     graft.Memo.cached(s.sparkContext.applicationId, s"minhash_sigs:$d") {
       CosineSim.register(s)
-      materialized(signaturesOf(spreadIfNarrow(s, Tables.documents(s, d))))
+      materialized(signaturesOf(spreadIfNarrow(s, Tables.documents(s, d)))
+        .withColumn("sim", expr("simhash_sig(shl, 64)")))
         .filter(twoShingles)
     }
 
@@ -613,10 +619,7 @@ object NearDup {
       s"need 64 % blocks == 0 and 1 <= combo < blocks (got $blocks, $combo)")
     val w = 64 / blocks
     val mask = (1L << w) - 1
-    // not materialized: the two join sides are one plan, so their
-    // exchange is reused and the signatures are computed once
-    val sims = shingleSets(s, d)
-      .select(col("doc_id"), expr("simhash_sig(shl, 64)").as("sim"))
+    val sims = minhashSigs(s, d).select(col("doc_id"), col("sim"))
     val keyStructs = (0 until blocks).combinations(combo).toSeq.zipWithIndex
       .map { case (bs, idx) =>
         val key = bs.zipWithIndex.map { case (b, i) =>

@@ -16,19 +16,23 @@ case class CentroidBuf(sums: Array[Double], n: Long)
 object CentroidAgg extends Aggregator[Seq[Float], CentroidBuf, Seq[Double]] {
   override def zero: CentroidBuf = CentroidBuf(Array.empty[Double], 0L)
 
-  override def reduce(b: CentroidBuf, v: Seq[Float]): CentroidBuf = {
-    if (v == null) return b
+  override def reduce(b: CentroidBuf, v: Seq[Float]): CentroidBuf =
+    if (v == null) b else add(b, v.length, v(_))
+
+  /** Adds one vector of `len` elements, element i read by `at(i)`: the
+    * per-row rule of [[reduce]], which the IVF trainer's Lloyd's step
+    * (LlmSimilarity.lloydStep) also applies to its raw array rows. */
+  def add(b: CentroidBuf, len: Int, at: Int => Double): CentroidBuf =
     if (b.sums.isEmpty) {
-      val s = new Array[Double](v.length)
+      val s = new Array[Double](len)
       var i = 0
-      while (i < v.length) { s(i) = v(i); i += 1 }
+      while (i < len) { s(i) = at(i); i += 1 }
       CentroidBuf(s, 1L)
     } else {
       var i = 0
-      while (i < v.length) { b.sums(i) += v(i); i += 1 }
+      while (i < len) { b.sums(i) += at(i); i += 1 }
       CentroidBuf(b.sums, b.n + 1L)
     }
-  }
 
   override def merge(a: CentroidBuf, b: CentroidBuf): CentroidBuf = {
     if (a.sums.isEmpty) b

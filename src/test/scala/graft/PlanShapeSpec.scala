@@ -376,7 +376,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     // still catching any stage that doubles its shuffle
     assert(pipeN <= 6,
       s"pipeline_curation grew to $pipeN shuffles:\n" + physical(pipe).take(3000))
-    spark.catalog.clearCache()
+    spark.catalog.clearCache(); Memo.clear()
   }
 
   test("text_perplexity reuses the (doc, term) shuffle across all three branches") {

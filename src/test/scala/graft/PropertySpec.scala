@@ -478,24 +478,21 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
       val train = LlmSimilarity.ivfTrainSet(spark, sf)
       val k = LlmSimilarity.kCells(spark, sf)
       var old = centsOf(train.withColumn("cell", expr(s"vec_id % $k"))).localCheckpoint()
-      def lloyd(cents: Option[Array[(Long, Array[Double])]]) =
-        LlmSimilarity.lloydStep(train, cents, k).collect().sortBy(_._1)
-      var now = lloyd(None)
+      var now = LlmSimilarity.lloydStep(train, None, k).localCheckpoint()
       for (step <- 0 to LlmSimilarity.ivfIters) {
         if (step > 0) {
           old = centsOf(assigned(train, old)).localCheckpoint()
-          now = lloyd(Some(now))
+          now = LlmSimilarity.lloydStep(train, Some(now), k).localCheckpoint()
         }
         val want = table(old)
-        val got = now.toSeq.map { case (c, v) => (c, v.toSeq) }
+        val got = table(now)
         assert(got.map(_._1) == want.map(_._1), s"$sf step $step: cells differ")
         got.zip(want).foreach { case ((c, g), (_, w)) =>
           assert(g.length == w.length && g.zip(w).forall { case (a, b) =>
             java.lang.Double.compare(a, b) == 0 }, s"$sf step $step: cell $c differs")
         }
       }
-      assert(table(LlmSimilarity.ivfTrained(spark, sf)) ==
-        now.toSeq.map { case (c, v) => (c, v.toSeq) })
+      assert(table(LlmSimilarity.ivfTrained(spark, sf)) == table(now))
     }
     Memo.clear()
   }
@@ -641,7 +638,7 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(true3.nonEmpty && true3.subsetOf(c5),
       "every true hamming<=3 pair must be caught while blocks - combo >= 3")
-    spark.catalog.clearCache()
+    spark.catalog.clearCache(); Memo.clear()
   }
 
   // The pigeonhole law multimodal_phash_pairs' exact-recall claim rests
@@ -682,7 +679,7 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
       val c = cont.getOrElse(pair, fail(s"$pair jaccard=$j missing from containment"))
       assert(c >= j - 1e-6, s"$pair containment $c < jaccard $j")
     }
-    spark.catalog.clearCache()
+    spark.catalog.clearCache(); Memo.clear()
   }
 
   // The hamming-ball law behind similarity_ann_lsh's multi-probe fan-out:

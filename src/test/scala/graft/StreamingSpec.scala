@@ -786,7 +786,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       .select(col("doc_id"), col("batch_id")).as[(Long, Int)].collect().toMap
     assert(batch.exists(p => whereIndexed(p._1) != whereIndexed(p._2)),
       "no cross-batch pair — the scramble failed to split any dup group")
-    spark.catalog.clearCache()
+    spark.catalog.clearCache(); Memo.clear()
   }
 
   test("L8-streaming semantic dedup: incremental cell index equals batch drop set") {
@@ -838,7 +838,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       .select("kept_id", "vec_id").as[(Long, Long)].collect()
     assert(pairRows.exists(p => whereIndexed(p._1) != whereIndexed(p._2)),
       "no cross-batch pair — the scramble failed to split any dup pair")
-    spark.catalog.clearCache()
+    spark.catalog.clearCache(); Memo.clear()
   }
 
   test("L2-streaming near-dup checkpoint recovery: restart neither re-flags nor drops") {
@@ -892,7 +892,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     assert(spark.read.parquet(ixDir).select("doc_id").count() ==
       spark.read.parquet(ixDir).select("doc_id").distinct().count(),
       "restart re-indexed at least one document")
-    spark.catalog.clearCache()
+    spark.catalog.clearCache(); Memo.clear()
   }
 
   test("L8-streaming checkpoint recovery: cell-pruned index read, no re-flag, no drop") {
@@ -976,7 +976,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       "cell filter read a file outside its partition")
     assert(prunedFiles.length < totalFiles,
       s"cell filter read all $totalFiles index files — pruning inactive")
-    spark.catalog.clearCache()
+    spark.catalog.clearCache(); Memo.clear()
   }
 
   test("S5/S7 checkpoint recovery: restart resumes exactly-once from the offset log") {
